@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from file_indexer_spark.index_store import land
+
 TOP_K = 10
 N_QUERIES = 10  # vec_id < 10 are the benchmark query vectors
 NPROBE = 3
@@ -1382,44 +1384,10 @@ def ivfpq_effective_codes(index: dict[str, DataFrame]) -> DataFrame:
     return codes
 
 
-# list-range partition count for the clustered codes layout; at 100 TB
-# this scales with the list count (each range partition should hold a
-# few row groups per inverted list so probe reads prune tightly)
-IVFPQ_CODES_RANGE_PARTITIONS = 8
-
-
-def write_ivfpq_index(
-    spark, index: dict[str, DataFrame], workdir: str
-) -> dict[str, DataFrame]:
-    """Materialize the index tables to parquet with codes CLUSTERED BY
-    LIST (``repartitionByRange("centroid_id")`` + sort-within) — the
-    layout every serve-path docstring in this module assumes: a probe
-    touching nprobe lists reads only those row groups.  Shared by the
-    sim11 build landing and sim18 compaction — one layout discipline,
-    one writer.  Maintenance keys (``tombstones``/``delta``) are
-    written as-is when present so an edited index round-trips.
-
-    The tables are independent (no shared checkpoint in any lineage),
-    so the writes run as OVERLAPPED driver-thread jobs (guide §2.6,
-    round-13) — the broadcast-sized centroid/codebook/meta writes
-    back-fill the cores the clustered code write leaves idle in its
-    tail."""
-    import os
-
-    from file_indexer_spark.parallel import run_parallel
-
-    def write_one(item):
-        name, df = item
-        path = os.path.join(workdir, name)
-        if name == "codes":
-            df = df.repartitionByRange(
-                IVFPQ_CODES_RANGE_PARTITIONS, "centroid_id"
-            ).sortWithinPartitions("centroid_id", "vec_id")
-        df.write.mode("overwrite").parquet(path)
-        return name, spark.read.parquet(path)
-
-    items = list(index.items())
-    return dict(run_parallel([lambda it=it: write_one(it) for it in items]))
+# the clustered codes layout (index_store.land): range-partitioned by
+# inverted list and sorted within, so a probe touching nprobe lists
+# reads only those row groups
+IVFPQ_CLUSTER = {"codes": ("centroid_id", "vec_id")}
 
 
 def ivfpq_compact(
@@ -1438,7 +1406,7 @@ def ivfpq_compact(
         k: v for k, v in index.items() if k not in ("tombstones", "delta")
     }
     folded["codes"] = ivfpq_effective_codes(index)
-    return write_ivfpq_index(spark, folded, workdir)
+    return land(spark, folded, workdir, IVFPQ_CLUSTER)
 
 
 # the standard RRF smoothing constant (Cormack et al., the value

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from file_indexer_spark.functions import hashing as H
+from file_indexer_spark.index_store import land
 
 # Closed-class marker words used for the stopword-ratio quality signal.
 # (The synthetic corpus vocabulary contains 'the' and 'a'.)
@@ -851,41 +852,10 @@ def bm25_append(
     }
 
 
-# term-range partition count for the clustered postings layout; at
-# 100 TB this scales with the vocabulary (each range partition should
-# hold a few row groups per term so the IN predicate prunes tightly)
-BM25_POSTINGS_RANGE_PARTITIONS = 8
-
-
-def write_bm25_index(
-    spark, mats: dict[str, DataFrame], workdir: str
-) -> dict[str, DataFrame]:
-    """Materialize the index tables to parquet with postings CLUSTERED
-    BY TERM (``repartitionByRange`` + sort-within-partitions), so a
-    query's IN predicate prunes row groups at serve time.  Shared by
-    the t16 build, the t17 append landing, and t18 compaction — one
-    layout discipline, one writer.
-
-    The tables are independent (postings/doclen/scalars share no
-    checkpoint), so the writes run as OVERLAPPED driver-thread jobs
-    (guide §2.6, round-13): each job's task tail back-fills the cores
-    the others free instead of serializing three wall-clocks."""
-    import os
-
-    from file_indexer_spark.parallel import run_parallel
-
-    def write_one(item):
-        name, df = item
-        path = os.path.join(workdir, name)
-        if name == "postings":
-            df = df.repartitionByRange(
-                BM25_POSTINGS_RANGE_PARTITIONS, "term"
-            ).sortWithinPartitions("term", "doc_id")
-        df.write.mode("overwrite").parquet(path)
-        return name, spark.read.parquet(path)
-
-    items = list(mats.items())
-    return dict(run_parallel([lambda it=it: write_one(it) for it in items]))
+# the clustered postings layout (index_store.land): range-partitioned
+# by term and sorted within, so a query's IN predicate prunes row
+# groups at serve time
+BM25_CLUSTER = {"postings": ("term", "doc_id")}
 
 
 def bm25_compact(
@@ -901,7 +871,7 @@ def bm25_compact(
     serve read.  Contents are untouched: compaction is a pure layout
     rewrite, so the served ranking is bit-identical before and after
     (the gate hashes it against t15's oracle verbatim)."""
-    return write_bm25_index(spark, mats, workdir)
+    return land(spark, mats, workdir, BM25_CLUSTER)
 
 
 # the t20 gate phrase: adjacent in ~7% of synthetic docs, with some
@@ -974,29 +944,13 @@ def positional_index_tables(docs: DataFrame) -> dict[str, DataFrame]:
     ENTIRE vocabulary (t20 filters to one phrase's terms before its
     joins; the stored index pays the tokenize cost ONCE and serves
     ARBITRARY phrases from narrow term-pruned re-reads).  Written
-    term-clustered via :func:`write_positional_index` so each leg's
+    term-clustered (:data:`POSITIONAL_CLUSTER`) so each leg's
     equality predicate prunes row groups at serve time."""
     return {"postings": _positional_tokens(docs)}
 
 
-def write_positional_index(
-    spark, mats: dict[str, DataFrame], workdir: str
-) -> dict[str, DataFrame]:
-    """Materialize the positional postings term-clustered (the
-    write_bm25_index layout discipline — same range-partition count,
-    same serve-time row-group pruning argument)."""
-    import os
-
-    out: dict[str, DataFrame] = {}
-    for name, df in mats.items():
-        path = os.path.join(workdir, name)
-        if name == "postings":
-            df = df.repartitionByRange(
-                BM25_POSTINGS_RANGE_PARTITIONS, "term"
-            ).sortWithinPartitions("term", "doc_id", "p")
-        df.write.mode("overwrite").parquet(path)
-        out[name] = spark.read.parquet(path)
-    return out
+# the positional postings layout: BM25_CLUSTER plus the position
+POSITIONAL_CLUSTER = {"postings": ("term", "doc_id", "p")}
 
 
 def positional_upsert(
@@ -1011,8 +965,8 @@ def positional_upsert(
     Mixed insert+update batches take one code path; re-upserting the
     same batch is idempotent.  At 100 TB the anti-join is one pass
     over the stored postings; a production table amortizes it with
-    tombstones folded at compaction (:func:`write_positional_index`
-    — t23's rewrite)."""
+    tombstones folded at compaction (t23's term-clustered
+    rewrite)."""
     ids = batch_docs.select("doc_id").distinct()
     kept = mats["postings"].join(F.broadcast(ids), "doc_id", "left_anti")
     return {"postings": kept.unionByName(_positional_tokens(batch_docs))}

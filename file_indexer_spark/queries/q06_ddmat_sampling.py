@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.index_store import land
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -131,17 +132,12 @@ def dd12_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH index (parquet round-trip of the band + shingle-set tables —
     the x2 compute-once pattern applied to dd3). Work is
     O(batch x matched buckets), never O(corpus)."""
-    import os
-
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
     base = docs.filter(F.col("doc_id") % 10 != 7)
     workdir, _ = _stream_workdir("fis_dd12", sf_dir)
-    mats: dict[str, DataFrame] = {}
-    for name, df in dd.lsh_index_tables(base).items():
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        mats[name] = spark.read.parquet(path)
+    # bands and shingle sets share an unmaterialized checkpoint
+    mats = land(spark, dd.lsh_index_tables(base), workdir, parallel=False)
     return dd.incremental_lsh_pairs(mats, new)
 
 
@@ -155,25 +151,17 @@ def dd13_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch: probe the index (dd12) and refresh only the touched
     clusters. Output is the whole corpus's assignment table, provably
     identical to dd7 recomputed from scratch."""
-    import os
-
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
     base = docs.filter(F.col("doc_id") % 10 != 7)
     workdir, _ = _stream_workdir("fis_dd13", sf_dir)
-    mats: dict[str, DataFrame] = {}
-    for name, df in dd.lsh_index_tables(base).items():
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        mats[name] = spark.read.parquet(path)
+    mats = land(spark, dd.lsh_index_tables(base), workdir, parallel=False)
     # round-12 optimization: the base pair list (and hence the stored
     # assignment) derives from the just-materialized band/shingle
     # tables instead of re-running the signing machinery over the
     # corpus text a second time — row-for-row the same pairs
     assignments = dd.dedup_clusters(base, dd.lsh_pairs_from_tables(mats))
-    path = os.path.join(workdir, "assignments")
-    assignments.write.mode("overwrite").parquet(path)
-    mats["assignments"] = spark.read.parquet(path)
+    mats |= land(spark, {"assignments": assignments}, workdir)
     new_pairs = dd.incremental_lsh_pairs(mats, new)
     return dd.incremental_cluster_refresh(mats["assignments"], new_pairs, new)
 
@@ -276,6 +264,7 @@ def st4_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from file_indexer_spark.streaming import dedup as sd
+    from file_indexer_spark.streaming.util import run_to_memory_sink
 
     tune_session(spark)
     base, tag = _stream_workdir("fis_st4", sf_dir)
@@ -287,7 +276,7 @@ def st4_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = sd.read_docs_stream(spark, src, max_files_per_trigger=1)
     sink = f"st4_sink_{tag}"
-    sd.run_to_memory_sink(sd.dedup_stream(stream), sink)
+    run_to_memory_sink(sd.dedup_stream(stream), sink)
     return spark.table(sink).orderBy("content_hash")
 
 

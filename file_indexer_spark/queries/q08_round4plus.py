@@ -858,6 +858,7 @@ def st7_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from file_indexer_spark.streaming import curation as sc
+    from file_indexer_spark.streaming.util import run_to_memory_sink
 
     tune_session(spark)
     base, tag = _stream_workdir("fis_st7", sf_dir)
@@ -878,7 +879,7 @@ def st7_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = sc.bench_shingle_set(docs)
     stream = sc.read_source_docs_stream(spark, src, max_files_per_trigger=1)
     sink = f"st7_sink_{tag}"
-    sc.run_to_memory_sink(sc.curation_stream(stream, bench), sink)
+    run_to_memory_sink(sc.curation_stream(stream, bench), sink)
     return sc.curation_accounting(docs, spark.table(sink))
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from file_indexer_spark.functions import hashing as H  # noqa: F401
+from file_indexer_spark.index_store import land
 from file_indexer_spark.operators import curation as cu  # noqa: F401
 from file_indexer_spark.operators import dedup as dd  # noqa: F401
 from file_indexer_spark.operators import duplicates as dup  # noqa: F401
@@ -28,7 +29,6 @@ from file_indexer_spark.registry_core import (  # noqa: F401
     _events,
     _files,
     _land_arrivals,
-    _mat_tables,
     _stream_workdir,
     _table,
     register,
@@ -343,7 +343,7 @@ def sim11_ivfpq_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, _ = _stream_workdir("fis_sim11", sf_dir)
     # round-13: the four index tables share no checkpoint — land them
     # as overlapped driver-thread jobs (guide §2.6)
-    mats = _mat_tables(spark, sim.ivfpq_index_tables(emb), base)
+    mats = land(spark, sim.ivfpq_index_tables(emb), base)
     queries = emb.filter(F.col("vec_id") < sim.N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -371,7 +371,7 @@ def sim12_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") % 10 != 7)
     workdir, _ = _stream_workdir("fis_sim12", sf_dir)
     # round-13: overlapped independent-table landing (guide §2.6)
-    mats = _mat_tables(spark, sim.ivfpq_index_tables(base), workdir)
+    mats = land(spark, sim.ivfpq_index_tables(base), workdir)
     merged = sim.ivfpq_append(mats, new)
     queries = emb.filter(F.col("vec_id") < sim.N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -397,7 +397,7 @@ def x2_dup_assets_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-13: the four modality member tables are independent decode
     # lineages (the text branch's internal checkpoints are private to
     # it) — land them as overlapped driver-thread jobs (guide §2.6)
-    mats = _mat_tables(spark, xm.fingerprint_tables(docs), base)
+    mats = land(spark, xm.fingerprint_tables(docs), base)
     return xm.duplicate_assets_from_tables(mats)
 
 

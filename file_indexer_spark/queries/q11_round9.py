@@ -81,55 +81,21 @@ def st13_streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
 @register("x3_dup_assets_append", ORACLES["x1_cross_modal_dup_assets"])
 def x3_dup_assets_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3: cross-modal fingerprint APPEND — completes the compute-once
-    family's symmetry (ANN has sim12, dedup has dd12/dd13). The ingest
-    batch (doc_id % 10 == 7) decodes only its own blobs; its media
-    member rows are parquet APPENDS, the text members are refreshed via
-    the stored band index (dd12 probe + dd13 refresh) into a fresh
-    version, and the report re-runs over re-reads — the base corpus is
-    never re-decoded or re-signed."""
-    import os
+    family's symmetry (ANN has sim12, dedup has dd12/dd13). The base
+    state lands as version 0 of the cross-modal store; the ingest batch
+    (doc_id % 10 == 7) decodes only its own blobs; its media member
+    rows are appended, the text members are refreshed via the stored
+    band index (dd12 probe + dd13 refresh) into a fresh snapshot, and
+    the report re-runs over re-reads — the base corpus is never
+    re-decoded or re-signed (x4's fold, applied to one batch)."""
+    from file_indexer_spark.streaming import crossmodal as sxm
 
     tune_session(spark)
     docs = _table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 10 == 7)
-    base = docs.filter(F.col("doc_id") % 10 != 7)
     workdir, _ = _stream_workdir("fis_x3", sf_dir)
-
-    def p(name: str, version: str | None = None) -> str:
-        return os.path.join(workdir, name if version is None else f"{name}/{version}")
-
-    state0 = xm.fingerprint_state(base)
-    for name in ("image_members", "audio_members", "video_members",
-                 "lsh_bands", "lsh_shingle_sets"):
-        state0[name].write.mode("overwrite").parquet(p(name))
-    state0["text_members"].write.mode("overwrite").parquet(p("text_members", "v0"))
-
-    stored = {
-        name: spark.read.parquet(p(name))
-        for name in ("image_members", "audio_members", "video_members",
-                     "lsh_bands", "lsh_shingle_sets")
-    }
-    stored["text_members"] = spark.read.parquet(p("text_members", "v0"))
-    # text refresh consumes the PRE-append index state; write it first
-    xm.fingerprint_state_append(stored, new)["text_members"].write.mode(
-        "overwrite"
-    ).parquet(p("text_members", "v1"))
-    # media + index: batch-only slices, appended to the stored dirs
-    xm._image_members(new).write.mode("append").parquet(p("image_members"))
-    xm._audio_members(new).write.mode("append").parquet(p("audio_members"))
-    xm._video_members(new).write.mode("append").parquet(p("video_members"))
-    batch_lsh = dd.lsh_index_tables(new)
-    batch_lsh["bands"].write.mode("append").parquet(p("lsh_bands"))
-    batch_lsh["shingle_sets"].write.mode("append").parquet(p("lsh_shingle_sets"))
-
-    return xm.duplicate_assets_from_tables(
-        {
-            "text_members": spark.read.parquet(p("text_members", "v1")),
-            "image_members": spark.read.parquet(p("image_members")),
-            "audio_members": spark.read.parquet(p("audio_members")),
-            "video_members": spark.read.parquet(p("video_members")),
-        }
-    )
+    sxm.ingest_batch(spark, docs.filter(F.col("doc_id") % 10 != 7), workdir, 0)
+    sxm.ingest_batch(spark, docs.filter(F.col("doc_id") % 10 == 7), workdir, 1)
+    return sxm.duplicate_assets_report(spark, workdir)
 
 
 @register(

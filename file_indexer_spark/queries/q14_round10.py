@@ -433,7 +433,8 @@ def dd19_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vertex program over the AFFECTED COMPONENTS only. Output is
     the whole corpus's rank table, provably identical to dd18
     recomputed from scratch — gated by dd18's oracle VERBATIM."""
-    import os
+    from file_indexer_spark.index_store import land
+    from file_indexer_spark.parallel import run_parallel
 
     docs = _table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 7)
@@ -445,30 +446,26 @@ def dd19_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bands/shingle sets (round-12 optimization: the dd3 signing
     # machinery runs ONCE — previously the pair list re-signed the
     # corpus a second time for rows the stored tables already
-    # determine), and assignment/ranks from the re-read pairs
-    mats: dict[str, DataFrame] = {}
-
-    def mat(name: str, df: DataFrame) -> DataFrame:
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        mats[name] = spark.read.parquet(path)
-        return mats[name]
-
-    for name, df in dd.lsh_index_tables(base).items():
-        mat(name, df)
-    mat("pairs", dd.lsh_pairs_from_tables(mats))
+    # determine), and assignment/ranks from the re-read pairs; bands
+    # and shingle sets share an unmaterialized checkpoint
+    mats = land(spark, dd.lsh_index_tables(base), workdir, parallel=False)
+    mats |= land(spark, {"pairs": dd.lsh_pairs_from_tables(mats)}, workdir)
     # round-13 (guide §2.6): assignment and rank builds both read ONLY
-    # the just-landed pairs parquet — independent multi-round programs,
-    # so their jobs overlap from driver threads instead of serializing
-    # two iteration tails
-    from file_indexer_spark.parallel import run_parallel
-
-    run_parallel(
+    # the just-landed pairs parquet — independent multi-round programs
+    # whose construction already runs jobs, so each is built AND landed
+    # from its own driver thread instead of serializing two iteration
+    # tails
+    for landed in run_parallel(
         [
-            lambda: mat("assignments", dd.dedup_clusters(base, mats["pairs"])),
-            lambda: mat("ranks", gr.pagerank(base, mats["pairs"])),
+            lambda: land(
+                spark,
+                {"assignments": dd.dedup_clusters(base, mats["pairs"])},
+                workdir,
+            ),
+            lambda: land(spark, {"ranks": gr.pagerank(base, mats["pairs"])}, workdir),
         ]
-    )
+    ):
+        mats |= landed
     # round-13 (guide §5): the dd12 probe feeds BOTH the cluster
     # refresh and the rank refresh; each cuts its new_pairs argument
     # internally, but those are two separate checkpoints of the SAME

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from file_indexer_spark.index_store import land
 from file_indexer_spark.operators import text as tx
 from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
@@ -46,14 +47,6 @@ from file_indexer_spark.session import tune_session
 # (the hash gate proves the build/serve split is lossless).
 
 
-def _write_bm25_index(
-    spark: SparkSession, docs: DataFrame, workdir: str
-) -> dict[str, DataFrame]:
-    """Materialize the BM25 index tables term-clustered (the shared
-    :func:`operators.text.write_bm25_index` layout discipline)."""
-    return tx.write_bm25_index(spark, tx.bm25_index_tables(docs), workdir)
-
-
 @register("t16_bm25_materialized", ORACLES["t15_bm25_topk"])
 def t16_bm25_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T16: t15 via the build-once/serve-many pattern — materialize
@@ -64,7 +57,7 @@ def t16_bm25_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = _table(spark, sf_dir, "documents")
     workdir, _ = _stream_workdir("fis_t16", sf_dir)
-    mats = _write_bm25_index(spark, docs, workdir)
+    mats = land(spark, tx.bm25_index_tables(docs), workdir, tx.BM25_CLUSTER)
     return tx.bm25_topk_from_index(mats)
 
 
@@ -84,7 +77,7 @@ def t17_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % 10 != 7)
     new = docs.filter(F.col("doc_id") % 10 == 7)
     workdir, _ = _stream_workdir("fis_t17", sf_dir)
-    mats = _write_bm25_index(spark, base, workdir)
+    mats = land(spark, tx.bm25_index_tables(base), workdir, tx.BM25_CLUSTER)
     merged = tx.bm25_append(mats, new)
     return tx.bm25_topk_from_index(merged)
 

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from file_indexer_spark.index_store import IndexStore, land
 from file_indexer_spark.operators import text as tx
 from file_indexer_spark.registry_core import (  # noqa: F401
     ORACLES,
@@ -68,7 +69,7 @@ def t17b_bm25_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = docs.filter(slot.isin(3, 7))
     workdir, _ = _stream_workdir("fis_t17b", sf_dir)
-    mats = tx.write_bm25_index(spark, tx.bm25_index_tables(stale), workdir)
+    mats = land(spark, tx.bm25_index_tables(stale), workdir, tx.BM25_CLUSTER)
     merged = tx.bm25_upsert(mats, batch)
     return tx.bm25_topk_from_index(merged)
 
@@ -85,57 +86,30 @@ def t18_bm25_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T18: lexical index COMPACTION — three appends land their
     postings as separate file sets (each one fragments every term's
     posting list further; the serve plan's row-group pruning degrades
-    toward a full scan), then ``bm25_compact`` rewrites the index
+    toward a full scan), then the compaction rewrites the index
     term-clustered in one pass and the query is served from the
-    compacted layout.  The w10 discipline applied to the retrieval
-    index; BENCH_INCREMENTAL's lexical_index block measures the serve
+    compacted layout.  The index is t19's segment store (one version
+    per landing, per-segment scalar rows summed at read), so this is
+    the w10 discipline applied to the retrieval index;
+    BENCH_INCREMENTAL's lexical_index block measures the serve
     economics (flat after compaction vs degrading uncompacted)."""
+    from file_indexer_spark.streaming import lexical as slex
+
     tune_session(spark)
     docs = _table(spark, sf_dir, "documents")
     slot = F.col("doc_id") % 10
-    base = docs.filter(~slot.isin(7, 8, 9))
     workdir, _ = _stream_workdir("fis_t18", sf_dir)
-    mats = tx.write_bm25_index(
-        spark, tx.bm25_index_tables(base), os.path.join(workdir, "base")
-    )
-    # land each append the way a steady-state writer does: ONLY the
-    # batch's file set is written, sitting beside the older ones
-    # (fragmented) — the round-12 optimization fixed the previous shape
-    # here, which rewrote the FULL union per generation (three
-    # corpus-sized writes standing in for three batch-sized ones; same
-    # rows served, ~3x the write volume — OPTIMIZATION_r12.md)
-    paths = {
-        name: [os.path.join(workdir, "base", name)]
-        for name in ("postings", "doclen")
-    }
+    store = IndexStore(spark, workdir)
+    base = tx.bm25_index_tables(docs.filter(~slot.isin(7, 8, 9)))
+    store.write(0, base, tx.BM25_CLUSTER)
+    store.commit(0)
+    # each append lands the way a steady-state writer does: ONLY the
+    # batch's file set is written, unclustered, beside the older ones
     for i in (7, 8, 9):
-        batch_tables = tx.bm25_index_tables(docs.filter(slot == i))
-        for name in ("postings", "doclen"):
-            p = os.path.join(workdir, f"gen{i}", name)
-            batch_tables[name].write.mode("overwrite").parquet(p)
-            paths[name].append(p)
-        # the scalars fold is incremental (stored + batch counts) and
-        # one row — land the merged row per generation as before
-        merged_scalars = mats["scalars"].join(
-            F.broadcast(
-                batch_tables["scalars"].select(
-                    F.col("n_docs").alias("b_docs"),
-                    F.col("tot_tokens").alias("b_tokens"),
-                )
-            )
-        ).select(
-            (F.col("n_docs") + F.col("b_docs")).cast("long").alias("n_docs"),
-            (F.col("tot_tokens") + F.col("b_tokens")).cast("long").alias("tot_tokens"),
-        )
-        sp = os.path.join(workdir, f"gen{i}", "scalars")
-        merged_scalars.write.mode("overwrite").parquet(sp)
-        mats = {
-            "postings": spark.read.parquet(*paths["postings"]),
-            "doclen": spark.read.parquet(*paths["doclen"]),
-            "scalars": spark.read.parquet(sp),
-        }
-    compacted = tx.bm25_compact(spark, mats, os.path.join(workdir, "compact"))
-    return tx.bm25_topk_from_index(compacted)
+        store.write(i, tx.bm25_index_tables(docs.filter(slot == i)))
+        store.commit(i)
+    slex.compact_lexical_state(spark, workdir)
+    return slex.search(spark, workdir)
 
 
 # ------------------------------------------------------------- dd21

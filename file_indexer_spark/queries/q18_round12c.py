@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 
+from file_indexer_spark.index_store import IndexStore, land
 from file_indexer_spark.operators import similarity as sim
 from file_indexer_spark.operators import text as tx
 from file_indexer_spark.queries.q04_dedup_sim import _DUCK_DOT, _DUCK_NORMS
@@ -167,14 +168,17 @@ def _sim17_edited_index(
     spark: SparkSession, sf_dir: str, tag: str
 ) -> tuple[dict[str, DataFrame], DataFrame, str]:
     """Shared gate plumbing: materialize the base index (list-clustered
-    parquet, the sim11 landing via the shared writer), apply ONE upsert
+    parquet, the sim11 landing), apply ONE upsert
     call carrying the whole edit script, and return (edited index,
     query batch)."""
     emb = _table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_EDIT_BASE))
     workdir, _ = _stream_workdir(tag, sf_dir)
-    mats = sim.write_ivfpq_index(
-        spark, sim.ivfpq_index_tables(base), os.path.join(workdir, "base")
+    mats = land(
+        spark,
+        sim.ivfpq_index_tables(base),
+        os.path.join(workdir, "base"),
+        sim.IVFPQ_CLUSTER,
     )
     batch, dels = _edit_batches(emb)
     edited = sim.ivfpq_upsert(mats, batch, dels)
@@ -270,10 +274,11 @@ def t21_phrase_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads O(postings of the phrase terms) row-group-pruned; the corpus
     text is tokenized exactly once per snapshot."""
     base, _ = _stream_workdir("fis_t21", sf_dir)
-    mats = tx.write_positional_index(
+    mats = land(
         spark,
         tx.positional_index_tables(_table(spark, sf_dir, "documents")),
         base,
+        tx.POSITIONAL_CLUSTER,
     )
     return tx.phrase_search_from_index(mats)
 
@@ -467,8 +472,8 @@ def t22_phrase_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = docs.filter(slot.isin(3, 7))
     workdir, _ = _stream_workdir("fis_t22", sf_dir)
-    mats = tx.write_positional_index(
-        spark, tx.positional_index_tables(stale), workdir
+    mats = land(
+        spark, tx.positional_index_tables(stale), workdir, tx.POSITIONAL_CLUSTER
     )
     return tx.phrase_search_from_index(tx.positional_upsert(mats, batch))
 
@@ -478,27 +483,17 @@ def t23_phrase_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T23: positional-index COMPACTION — three appends land their
     postings as separate file sets (every term's positional rows
     spread further; the serve legs' row-group pruning degrades), then
-    the shared term-clustered writer rewrites the index in one pass
-    and the phrase query serves from the compacted layout."""
+    the store's compaction rewrites the index term-clustered in one
+    pass and the phrase query serves from the compacted layout."""
     docs = _table(spark, sf_dir, "documents")
     slot = F.col("doc_id") % 10
     workdir, _ = _stream_workdir("fis_t23", sf_dir)
-    mats = tx.write_positional_index(
-        spark,
-        tx.positional_index_tables(docs.filter(~slot.isin(7, 8, 9))),
-        os.path.join(workdir, "base"),
-    )
-    posts = [mats["postings"]]
+    store = IndexStore(spark, workdir)
+    base = tx.positional_index_tables(docs.filter(~slot.isin(7, 8, 9)))
+    store.write(0, base, tx.POSITIONAL_CLUSTER)
+    store.commit(0)
     for s in (7, 8, 9):
-        p = os.path.join(workdir, f"gen{s}")
-        tx.positional_index_tables(docs.filter(slot == s))[
-            "postings"
-        ].write.parquet(p)
-        posts.append(spark.read.parquet(p))
-    frag = posts[0]
-    for x in posts[1:]:
-        frag = frag.unionByName(x)
-    compacted = tx.write_positional_index(
-        spark, {"postings": frag}, os.path.join(workdir, "compact")
-    )
-    return tx.phrase_search_from_index(compacted)
+        store.write(s, tx.positional_index_tables(docs.filter(slot == s)))
+        store.commit(s)
+    store.compact(cluster=tx.POSITIONAL_CLUSTER)
+    return tx.phrase_search_from_index(store.read())

@@ -68,30 +68,6 @@ def _stream_workdir(prefix: str, sf_dir: str) -> tuple[str, str]:
     return base, tag
 
 
-def _mat_tables(
-    spark: SparkSession, tables: dict[str, DataFrame], workdir: str
-) -> dict[str, DataFrame]:
-    """Gate-build helper: write each table to parquet under
-    ``workdir/<name>`` and return the re-reads, OVERLAPPING the writes
-    from driver threads (guide §2.6, round-13 optimization). Callers
-    must pass INDEPENDENT tables only — frames sharing an
-    unmaterialized localCheckpoint (e.g. lsh bands + shingle sets,
-    which share the checkpointed shingle frame) must keep sequential
-    writes so the checkpoint materializes once."""
-    import os
-
-    from file_indexer_spark.parallel import run_parallel
-
-    def write_one(item):
-        name, df = item
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return name, spark.read.parquet(path)
-
-    items = list(tables.items())
-    return dict(run_parallel([lambda it=it: write_one(it) for it in items]))
-
-
 def _land_arrivals(src: str, dfs) -> None:
     """Write each DataFrame as one parquet 'arrival' file and pin
     strictly increasing mtimes, so the streaming file source (which

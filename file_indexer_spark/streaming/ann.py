@@ -14,18 +14,17 @@ repo already gates:
 
   * the STATE is the materialized IVF-PQ index of
     :func:`~file_indexer_spark.operators.similarity.ivfpq_index_tables`
-    — broadcast-sized ``centroids`` / ``codebook`` / ``meta`` written
-    once at bootstrap, plus the coded corpus as APPEND-ONLY parquet
-    (one ``codes/v{batch}`` dir per micro-batch: a foreachBatch replay
-    overwrites its own version dir, so at-least-once delivery cannot
-    duplicate rows);
+    kept in an :class:`~file_indexer_spark.index_store.IndexStore`
+    (layout, commit markers and the replay guard are documented
+    there): the broadcast-sized ``centroids`` / ``codebook`` / ``meta``
+    are snapshot tables written once by the bootstrap version, the
+    coded corpus an append table written by every version;
   * each micro-batch runs
     :func:`~file_indexer_spark.operators.similarity.ivfpq_encode_batch`
     (sim12's encode leg): one broadcast assignment pass + one broadcast
     codebook encode over the BATCH only — O(batch), never O(corpus);
-  * serving reads ``codes/*`` (all versions) + the frozen quantizer —
-    at scale the codes dirs are written clustered by centroid list, so
-    the probe join prunes to the probed lists' files.
+  * serving reads the store's read set: every live code segment +
+    the frozen quantizer.
 
 Exactness: encode-under-frozen-quantizer is exactly sim12's
 ``ivfpq_append`` contract (hash-gated against the composed DuckDB
@@ -44,12 +43,13 @@ new state dir; the stream itself never retrains.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from file_indexer_spark.index_store import IndexStore
 from file_indexer_spark.operators import similarity as sim
+from file_indexer_spark.streaming.util import drain_foreach_batch, read_parquet_stream
 
 EMB_STREAM_SCHEMA = T.StructType(
     [
@@ -62,102 +62,32 @@ EMB_STREAM_SCHEMA = T.StructType(
 _QUANTIZER_TABLES = ("centroids", "codebook", "meta")
 
 
+def _store(spark: SparkSession, state_dir: str) -> IndexStore:
+    return IndexStore(spark, state_dir, snapshot=_QUANTIZER_TABLES)
+
+
 def read_embeddings_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
-
-
-def _committed(root: str, prefix: str) -> list[int]:
-    """Committed ``{prefix}{n}`` dirs under root (parquet writes are
-    dir-atomic via _SUCCESS; a crashed half-write must be re-folded /
-    re-compacted, not trusted)."""
-    if not os.path.isdir(root):
-        return []
-    plen = len(prefix)
-    return sorted(
-        int(n[plen:])
-        for n in os.listdir(root)
-        if n.startswith(prefix)
-        and n[plen:].isdigit()
-        and os.path.exists(os.path.join(root, n, "_SUCCESS"))
-    )
-
-
-def _code_versions(state_dir: str) -> list[int]:
-    return _committed(os.path.join(state_dir, "codes"), "v")
-
-
-def _compacted_through(state_dir: str) -> int:
-    """Highest committed ``codes/c{m}`` compaction (−1 if none): c{m}
-    holds the union of versions <= m folded into one dir."""
-    cs = _committed(os.path.join(state_dir, "codes"), "c")
-    return cs[-1] if cs else -1
-
-
-def _codes_path(state_dir: str, version: int) -> str:
-    return os.path.join(state_dir, "codes", f"v{version}")
-
-
-def _live_code_paths(state_dir: str) -> list[str]:
-    """The consistent read set: the newest compacted dir (if any) plus
-    every committed version ABOVE it. Readers listing during a
-    compaction see either the old set or the new one — never both,
-    because a compaction dir only counts once its _SUCCESS lands and
-    supersedes everything at or below its watermark."""
-    m = _compacted_through(state_dir)
-    paths = (
-        [os.path.join(state_dir, "codes", f"c{m}")] if m >= 0 else []
-    )
-    paths += [
-        _codes_path(state_dir, v) for v in _code_versions(state_dir) if v > m
-    ]
-    return paths
+    return read_parquet_stream(spark, src, EMB_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def compact_state(spark: SparkSession, state_dir: str) -> int:
     """Small-files maintenance for a long-running ingest (w10's
-    OPTIMIZE applied to the streamed index): fold the live code dirs
-    into ONE compacted dir ``codes/c{max_version}``, then drop the
-    superseded dirs. Serving stays consistent throughout (see
-    :func:`_live_code_paths`); run from the maintenance cadence, not
-    the hot fold. Returns the new compaction watermark."""
-    import shutil
-
-    old_m = _compacted_through(state_dir)
-    versions = [v for v in _code_versions(state_dir) if v > old_m]
-    if not versions:
-        return old_m
-    new_m = versions[-1]
-    live = _live_code_paths(state_dir)
-    root = os.path.join(state_dir, "codes")
-    spark.read.parquet(*live).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(root, f"c{new_m}")
-    )
-    for v in versions:
-        shutil.rmtree(_codes_path(state_dir, v), ignore_errors=True)
-    if old_m >= 0:
-        shutil.rmtree(os.path.join(root, f"c{old_m}"), ignore_errors=True)
-    return new_m
+    OPTIMIZE applied to the streamed index): fold the live code
+    segments into ONE compacted code table. Serving stays consistent
+    throughout; run from the maintenance cadence, not the hot fold.
+    Returns the new compaction watermark."""
+    return _store(spark, state_dir).compact()
 
 
 def load_index(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
     """The stored index as serving-ready frames: the frozen quantizer
-    tables + every live code dir (sim11's serve path runs on this dict
-    unchanged, mid-ingest, after drain, or across compactions)."""
-    paths = _live_code_paths(state_dir)
-    if not paths:
+    tables + every live code segment (sim11's serve path runs on this
+    dict unchanged, mid-ingest, after drain, or across compactions)."""
+    index = _store(spark, state_dir).read()
+    if not index:
         raise ValueError(f"no ANN index state at {state_dir}")
-    index = {
-        name: spark.read.parquet(os.path.join(state_dir, name))
-        for name in _QUANTIZER_TABLES
-    }
-    index["codes"] = spark.read.parquet(*paths)
     return index
 
 
@@ -169,30 +99,19 @@ def ingest_batch(
     (label-rep centroids + md5-seeded codebook — sim10's build) and
     writes the frozen tables; every later batch encodes against them
     (:func:`~file_indexer_spark.operators.similarity.ivfpq_encode_batch`)
-    and appends only its own coded rows. Idempotent per version: a
-    replayed micro-batch (foreachBatch's at-least-once contract) whose
-    committed version dir already exists is skipped."""
-    versions = _code_versions(state_dir)
-    # monotone replay guard: foreachBatch batch ids strictly increase,
-    # so any committed (or compacted-through) id >= this one means the
-    # batch already folded
-    last = max(versions[-1] if versions else -1, _compacted_through(state_dir))
+    and appends only its own coded rows. A replayed version
+    (foreachBatch's at-least-once contract) is skipped."""
+    store = _store(spark, state_dir)
+    last = store.last_version()
     if version <= last:
-        return  # replayed micro-batch: already committed (or compacted)
+        return  # replayed micro-batch
     if last < 0:
         tables = sim.ivfpq_index_tables(batch)
-        for name in _QUANTIZER_TABLES:
-            tables[name].write.mode("overwrite").parquet(
-                os.path.join(state_dir, name)
-            )
-        codes = tables["codes"]
     else:
-        stored = {
-            name: spark.read.parquet(os.path.join(state_dir, name))
-            for name in _QUANTIZER_TABLES
-        }
-        codes = sim.ivfpq_encode_batch(stored, batch)
-    codes.write.mode("overwrite").parquet(_codes_path(state_dir, version))
+        stored = store.read(_QUANTIZER_TABLES)
+        tables = {"codes": sim.ivfpq_encode_batch(stored, batch)}
+    store.write(version, tables)
+    store.commit(version)
 
 
 def ingest_ann_stream(
@@ -201,23 +120,10 @@ def ingest_ann_stream(
     state_dir: str,
     checkpoint_dir: str,
 ):
-    """Run the ANN ingest over an embedding stream (availableNow:
-    drain-and-stop; pass a processingTime trigger via ``.trigger`` on a
-    long-lived pipeline). Each micro-batch runs :func:`ingest_batch`."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch(spark, batch, state_dir, int(batch_id))
-
-    query = (
-        emb_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain an embedding stream through :func:`ingest_batch`."""
+    return drain_foreach_batch(
+        emb_stream, lambda b, v: ingest_batch(spark, b, state_dir, v), checkpoint_dir
     )
-    query.awaitTermination()
-    return query
 
 
 def search(
@@ -237,15 +143,16 @@ def search(
 # the standard change-feed contract); across batches LAST WRITE WINS
 # by micro-batch order.
 #
-# State layout (extends the sim13 dirs):
-#   codes/v{n}  — the batch's delta codes, tagged cdc_v = n
-#   tombs/v{n}  — (vec_id, cdc_v=n): ids the batch superseded/deleted
+# Each version n adds two append tables to the sim13 store:
+#   codes — the batch's delta codes, tagged cdc_v = n
+#   tombs — (vec_id, cdc_v=n): ids the batch superseded/deleted
 # Mask rule: a code row (vec_id, cdc_v=v) is DEAD iff some tombstone
 # for vec_id has tv > v — so a batch's own upsert survives its own
 # tombstone (v == tv), older versions die, and a later delete kills
 # everything before it. load_cdc_index folds the rule into sim11's
-# serving dict; compact_cdc_state (sim18's discipline) rewrites the
-# survivors re-tagged at the watermark and drops the mask.
+# serving dict; compact_cdc_state (sim18's discipline) stores the
+# survivors and drops the mask. Survivors keep their tags: every later
+# tombstone is newer than all of them, so the rule still holds.
 
 CDC_STREAM_SCHEMA = T.StructType(
     [
@@ -260,27 +167,7 @@ CDC_STREAM_SCHEMA = T.StructType(
 def read_cdc_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(CDC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
-
-
-def _tomb_versions(state_dir: str) -> list[int]:
-    return _committed(os.path.join(state_dir, "tombs"), "v")
-
-
-def _tombs_path(state_dir: str, version: int) -> str:
-    return os.path.join(state_dir, "tombs", f"v{version}")
-
-
-def _live_tomb_paths(state_dir: str) -> list[str]:
-    m = _compacted_through(state_dir)
-    return [
-        _tombs_path(state_dir, v) for v in _tomb_versions(state_dir) if v > m
-    ]
+    return read_parquet_stream(spark, src, CDC_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def ingest_cdc_batch(
@@ -290,36 +177,25 @@ def ingest_cdc_batch(
     rows must be upserts: it trains and freezes the quantizer — the
     sim13 contract); later batches encode their upserts against the
     frozen tables (sim12's leg, O(batch)) and land one tombstone set
-    covering every touched id. Idempotent per version (monotone
-    replay guard, dir-atomic commits)."""
-    from pyspark.sql import functions as F
-
-    versions = _code_versions(state_dir)
-    last = max(versions[-1] if versions else -1, _compacted_through(state_dir))
+    covering every touched id, committed together with the codes. A
+    replayed version is skipped."""
+    store = _store(spark, state_dir)
+    last = store.last_version()
     if version <= last:
-        return  # replayed micro-batch: already committed (or compacted)
+        return  # replayed micro-batch
     ups = batch.filter(F.col("op") == "upsert").drop("op")
+    tag = F.lit(version).cast("long")
     if last < 0:
         tables = sim.ivfpq_index_tables(ups)
-        for name in _QUANTIZER_TABLES:
-            tables[name].write.mode("overwrite").parquet(
-                os.path.join(state_dir, name)
-            )
-        tables["codes"].withColumn(
-            "cdc_v", F.lit(version).cast("long")
-        ).write.mode("overwrite").parquet(_codes_path(state_dir, version))
-        return
-    stored = {
-        name: spark.read.parquet(os.path.join(state_dir, name))
-        for name in _QUANTIZER_TABLES
-    }
-    touched = batch.select("vec_id").distinct()
-    touched.withColumn("cdc_v", F.lit(version).cast("long")).write.mode(
-        "overwrite"
-    ).parquet(_tombs_path(state_dir, version))
-    sim.ivfpq_encode_batch(stored, ups).withColumn(
-        "cdc_v", F.lit(version).cast("long")
-    ).write.mode("overwrite").parquet(_codes_path(state_dir, version))
+    else:
+        stored = store.read(_QUANTIZER_TABLES)
+        tables = {
+            "codes": sim.ivfpq_encode_batch(stored, ups),
+            "tombs": batch.select("vec_id").distinct().withColumn("cdc_v", tag),
+        }
+    tables["codes"] = tables["codes"].withColumn("cdc_v", tag)
+    store.write(version, tables)
+    store.commit(version)
 
 
 def ingest_cdc_stream(
@@ -328,86 +204,47 @@ def ingest_cdc_stream(
     state_dir: str,
     checkpoint_dir: str,
 ):
-    """Run the CDC apply over a change stream (availableNow: drain-
-    and-stop). Each micro-batch runs :func:`ingest_cdc_batch`."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_cdc_batch(spark, batch, state_dir, int(batch_id))
-
-    query = (
-        cdc_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain a change stream through :func:`ingest_cdc_batch`."""
+    return drain_foreach_batch(
+        cdc_stream,
+        lambda b, v: ingest_cdc_batch(spark, b, state_dir, v),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
+
+
+def _masked_codes(tables: dict[str, DataFrame]) -> DataFrame:
+    """The live codes (cdc_v kept) after the tombstone mask rule."""
+    codes = tables["codes"]
+    if "tombs" not in tables:
+        return codes
+    tv = tables["tombs"].groupBy("vec_id").agg(F.max("cdc_v").alias("tv"))
+    return (
+        codes.join(F.broadcast(tv), "vec_id", "left")
+        .filter(F.col("tv").isNull() | (F.col("cdc_v") >= F.col("tv")))
+        .drop("tv")
+    )
 
 
 def load_cdc_index(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
     """The CDC state as a serving-ready index dict: quantizer tables +
     the mask-folded effective codes (last write wins). sim11's serve
     path runs on this unchanged — mid-ingest or after drain."""
-    from pyspark.sql import functions as F
-
-    paths = _live_code_paths(state_dir)
-    if not paths:
-        raise ValueError(f"no CDC index state at {state_dir}")
-    index = {
-        name: spark.read.parquet(os.path.join(state_dir, name))
-        for name in _QUANTIZER_TABLES
-    }
-    codes = spark.read.parquet(*paths)
-    tomb_paths = _live_tomb_paths(state_dir)
-    if tomb_paths:
-        tv = (
-            spark.read.parquet(*tomb_paths)
-            .groupBy("vec_id")
-            .agg(F.max("cdc_v").alias("tv"))
-        )
-        codes = (
-            codes.join(F.broadcast(tv), "vec_id", "left")
-            .filter(F.col("tv").isNull() | (F.col("cdc_v") >= F.col("tv")))
-            .drop("tv")
-        )
-    index["codes"] = codes.drop("cdc_v")
+    tables = load_index(spark, state_dir)
+    index = {name: tables[name] for name in _QUANTIZER_TABLES}
+    index["codes"] = _masked_codes(tables).drop("cdc_v")
     return index
 
 
 def compact_cdc_state(spark: SparkSession, state_dir: str) -> int:
-    """sim18's fold on the streamed state: rewrite the mask-folded
-    survivors as ONE dir re-tagged at the watermark, then drop the
-    superseded code dirs and the absorbed tombstones. Commit order is
-    loud-failure-safe: the compacted dir lands first (readers see old
-    set or new set); superseded dirs vanish next (a racing reader of a
-    removed dir fails loudly, never silently under-masked); tombstones
-    go last."""
-    import shutil
+    """sim18's fold on the streamed state: store the mask-folded
+    survivors as ONE code table; the absorbed tombstones are not
+    carried into the compaction. Returns the new watermark."""
 
-    from pyspark.sql import functions as F
+    def fold(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        kept = {name: tables[name] for name in _QUANTIZER_TABLES}
+        return {**kept, "codes": _masked_codes(tables).coalesce(1)}
 
-    old_m = _compacted_through(state_dir)
-    versions = [v for v in _code_versions(state_dir) if v > old_m]
-    if not versions:
-        return old_m
-    new_m = versions[-1]
-    effective = load_cdc_index(spark, state_dir)["codes"].withColumn(
-        "cdc_v", F.lit(new_m).cast("long")
-    )
-    root = os.path.join(state_dir, "codes")
-    effective.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(root, f"c{new_m}")
-    )
-    for v in versions:
-        shutil.rmtree(_codes_path(state_dir, v), ignore_errors=True)
-    if old_m >= 0:
-        shutil.rmtree(os.path.join(root, f"c{old_m}"), ignore_errors=True)
-    for v in _tomb_versions(state_dir):
-        if v <= new_m:
-            shutil.rmtree(_tombs_path(state_dir, v), ignore_errors=True)
-    return new_m
+    return _store(spark, state_dir).compact(fold)
 
 
 def search_cdc(

@@ -24,15 +24,12 @@ re-signing the base corpus:
     ever touched at report time (x2's property, preserved under
     streaming ingest).
 
-Physical layout: EVERY write is a per-version parquet dir
-(``<table>/v{batch}``, mode=overwrite) — a foreachBatch replay
-(at-least-once delivery) rewrites its own version dirs byte-for-byte
-instead of duplicating rows, and a crash mid-fold re-folds cleanly on
-restart whatever subset of dirs had committed. Append-only tables
-(media members, LSH index) are read as the union of all committed
-versions; the text member table is a full rewrite per batch (labels
-can change on merge — the dd13 shape), so only its LATEST version is
-read.
+Physical layout: the state is an
+:class:`~file_indexer_spark.index_store.IndexStore` (layout, commit
+markers and the replay guard are documented there). Media members and
+the LSH index are append tables; the text member table is a snapshot
+table rewritten per batch (labels can change on merge — the dd13
+shape).
 
 Exactness: dd12/dd13's induction argument (see st13) plus per-row-pure
 media branches give final state == fingerprint_state recomputed over
@@ -42,21 +39,18 @@ VERBATIM.
 
 State at scale: member tables are O(assets) narrow rows; the LSH index
 is O(corpus × bands); the per-batch text rewrite's passthrough copy is
-the same MERGE-table candidate st13 documents. Version-dir unions are
-a manifest concern at 100 TB (compact small versions periodically —
-the FilesTable compaction pattern); the algebra is unchanged.
+the same MERGE-table candidate st13 documents.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from file_indexer_spark.index_store import IndexStore
 from file_indexer_spark.operators import crossmodal as xm
 from file_indexer_spark.operators import dedup as dd
+from file_indexer_spark.streaming.util import drain_foreach_batch, read_parquet_stream
 
 DOCS_STREAM_SCHEMA = T.StructType(
     [
@@ -66,153 +60,47 @@ DOCS_STREAM_SCHEMA = T.StructType(
     ]
 )
 
-# append-only member/index tables: read = union of ALL committed
-# versions; text_members is versioned-rewrite: read = LATEST version
-_APPEND_TABLES = (
-    "image_members",
-    "audio_members",
-    "video_members",
-    "lsh_bands",
-    "lsh_shingle_sets",
-)
+
+def _store(spark: SparkSession, state_dir: str) -> IndexStore:
+    return IndexStore(spark, state_dir, snapshot=("text_members",))
 
 
 def read_docs_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
-
-
-def _committed(state_dir: str, table: str, prefix: str) -> list[int]:
-    root = os.path.join(state_dir, table)
-    if not os.path.isdir(root):
-        return []
-    plen = len(prefix)
-    return sorted(
-        int(n[plen:])
-        for n in os.listdir(root)
-        if n.startswith(prefix)
-        and n[plen:].isdigit()
-        and os.path.exists(os.path.join(root, n, "_SUCCESS"))
-    )
-
-
-def _versions(state_dir: str, table: str) -> list[int]:
-    return _committed(state_dir, table, "v")
-
-
-def _compacted_through(state_dir: str, table: str) -> int:
-    cs = _committed(state_dir, table, "c")
-    return cs[-1] if cs else -1
-
-
-def _vpath(state_dir: str, table: str, version: int) -> str:
-    return os.path.join(state_dir, table, f"v{version}")
-
-
-def _live_paths(state_dir: str, table: str) -> list[str]:
-    """Consistent read set for an append-only table: the newest
-    compacted dir (``c{m}`` = versions <= m folded into one) plus every
-    committed version above it — sim13's codes protocol."""
-    m = _compacted_through(state_dir, table)
-    paths = [os.path.join(state_dir, table, f"c{m}")] if m >= 0 else []
-    paths += [
-        _vpath(state_dir, table, v) for v in _versions(state_dir, table) if v > m
-    ]
-    return paths
-
-
-def _read_all(spark: SparkSession, state_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(*_live_paths(state_dir, table))
+    return read_parquet_stream(spark, src, DOCS_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def compact_state(spark: SparkSession, state_dir: str) -> int:
     """Small-files maintenance for a long-running cross-modal ingest:
-    fold each append-only table's live dirs into one compacted dir and
-    VACUUM the text member table down to its latest version (older
-    text versions are superseded snapshots, retained until now only as
-    crash-recovery slack). Serving stays consistent throughout — a
-    compaction dir only counts once its _SUCCESS lands and supersedes
-    everything at or below its watermark. Returns the new watermark."""
-    import shutil
-
-    new_m = -1
-    for table in _APPEND_TABLES:
-        old_m = _compacted_through(state_dir, table)
-        versions = [v for v in _versions(state_dir, table) if v > old_m]
-        if not versions:
-            new_m = max(new_m, old_m)
-            continue
-        m = versions[-1]
-        new_m = max(new_m, m)
-        live = _live_paths(state_dir, table)
-        spark.read.parquet(*live).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, table, f"c{m}")
-        )
-        for v in versions:
-            shutil.rmtree(_vpath(state_dir, table, v), ignore_errors=True)
-        if old_m >= 0:
-            shutil.rmtree(
-                os.path.join(state_dir, table, f"c{old_m}"), ignore_errors=True
-            )
-    text_versions = _versions(state_dir, "text_members")
-    for v in text_versions[:-1]:
-        shutil.rmtree(_vpath(state_dir, "text_members", v), ignore_errors=True)
-    return new_m
+    fold each append table's live segments into one compacted table and
+    keep only the newest text member snapshot. Serving stays consistent
+    throughout. Returns the new watermark."""
+    return _store(spark, state_dir).compact()
 
 
 def ingest_batch(
     spark: SparkSession, batch: DataFrame, state_dir: str, version: int
 ) -> None:
-    """Fold ONE document/media micro-batch into the fingerprint state:
-    decode the batch's own blobs into per-modality member rows (pure,
-    appended as this batch's version dirs), probe + refresh the text
-    clusters through the stored LSH index (dd12 → dd13, consuming only
-    versions < this one), and land the batch's own index rows.
-    Idempotent per version: the text rewrite commits LAST, so a
-    replayed micro-batch whose text version exists is a no-op and a
-    crashed fold re-runs cleanly."""
-    text_versions = _versions(state_dir, "text_members")
-    # monotone replay guard: foreachBatch batch ids strictly increase,
-    # so any committed version >= this one means this batch already
-    # folded (robust to a later vacuum having dropped the old dir)
-    if text_versions and version <= text_versions[-1]:
-        return  # replayed micro-batch: already folded
-    # media member rows: the batch's blobs only, one version dir each
-    xm._image_members(batch).write.mode("overwrite").parquet(
-        _vpath(state_dir, "image_members", version)
-    )
-    xm._audio_members(batch).write.mode("overwrite").parquet(
-        _vpath(state_dir, "audio_members", version)
-    )
-    xm._video_members(batch).write.mode("overwrite").parquet(
-        _vpath(state_dir, "video_members", version)
-    )
-    # text: refresh through the PRE-batch index state (live paths minus
-    # this batch's own dir — present only after a crashed half-fold,
-    # and then dd12's re-delivery anti-join drops its rows anyway)
-    own = _vpath(state_dir, "lsh_bands", version)
-    own_sets = _vpath(state_dir, "lsh_shingle_sets", version)
-    prior = [p for p in _live_paths(state_dir, "lsh_bands") if p != own]
-    prior_sets = [
-        p for p in _live_paths(state_dir, "lsh_shingle_sets") if p != own_sets
-    ]
-    if not prior or not text_versions:
-        assign = dd.dedup_clusters(batch, dd.minhash_lsh_pairs(batch))
-        text = assign.join(batch.select("doc_id", "n_chars"), "doc_id")
+    """Fold ONE document/media micro-batch into the fingerprint state.
+    The first batch bootstraps it (x3's
+    :func:`~file_indexer_spark.operators.crossmodal.fingerprint_state`);
+    every later one decodes its own blobs into per-modality member rows
+    (pure, appended), probes + refreshes the text clusters through the
+    stored LSH index (dd12 → dd13, consuming only committed versions),
+    and lands its own index rows. A replayed version is skipped."""
+    store = _store(spark, state_dir)
+    if store.is_replay(version):
+        return
+    stored = store.read(("lsh_bands", "lsh_shingle_sets", "text_members"))
+    if not stored:
+        tables = xm.fingerprint_state(batch)
     else:
         index = {
-            "bands": spark.read.parquet(*prior),
-            "shingle_sets": spark.read.parquet(*prior_sets),
+            "bands": stored["lsh_bands"],
+            "shingle_sets": stored["lsh_shingle_sets"],
         }
-        old_text = spark.read.parquet(
-            _vpath(state_dir, "text_members", text_versions[-1])
-        )
+        old_text = stored["text_members"]
         pairs = dd.incremental_lsh_pairs(index, batch)
         refreshed = dd.incremental_cluster_refresh(
             old_text.select("doc_id", "cluster_id"), pairs, batch
@@ -220,18 +108,19 @@ def ingest_batch(
         chars = old_text.select("doc_id", "n_chars").unionByName(
             batch.select("doc_id", "n_chars")
         )
-        text = refreshed.join(chars, "doc_id")
-    batch_lsh = dd.lsh_index_tables(batch)
-    batch_lsh["bands"].write.mode("overwrite").parquet(
-        _vpath(state_dir, "lsh_bands", version)
-    )
-    batch_lsh["shingle_sets"].write.mode("overwrite").parquet(
-        _vpath(state_dir, "lsh_shingle_sets", version)
-    )
-    # the commit marker: text_members/v{version} lands last
-    text.write.mode("overwrite").parquet(
-        _vpath(state_dir, "text_members", version)
-    )
+        batch_lsh = dd.lsh_index_tables(batch)
+        tables = {
+            "image_members": xm._image_members(batch),
+            "audio_members": xm._audio_members(batch),
+            "video_members": xm._video_members(batch),
+            "lsh_bands": batch_lsh["bands"],
+            "lsh_shingle_sets": batch_lsh["shingle_sets"],
+            "text_members": refreshed.join(chars, "doc_id"),
+        }
+    # bands, shingle sets (and a bootstrap's text members) share an
+    # unmaterialized checkpoint
+    store.write(version, tables, parallel=False)
+    store.commit(version)
 
 
 def ingest_crossmodal_stream(
@@ -240,42 +129,23 @@ def ingest_crossmodal_stream(
     state_dir: str,
     checkpoint_dir: str,
 ):
-    """Run the cross-modal ingest over a document stream (availableNow:
-    drain-and-stop; pass a processingTime trigger via ``.trigger`` on a
-    long-lived pipeline). Each micro-batch runs :func:`ingest_batch`."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch(spark, batch, state_dir, int(batch_id))
-
-    query = (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain a document stream through :func:`ingest_batch`."""
+    return drain_foreach_batch(
+        docs_stream, lambda b, v: ingest_batch(spark, b, state_dir, v), checkpoint_dir
     )
-    query.awaitTermination()
-    return query
 
 
 def stored_member_tables(
     spark: SparkSession, state_dir: str
 ) -> dict[str, DataFrame]:
     """The report-ready member tables from the streamed-in state: every
-    committed version of the per-row-pure media tables, the LATEST text
-    version."""
-    text_versions = _versions(state_dir, "text_members")
-    if not text_versions:
+    live segment of the per-row-pure media tables, the newest text
+    snapshot."""
+    names = ("text_members", "image_members", "audio_members", "video_members")
+    tables = _store(spark, state_dir).read(names)
+    if not tables:
         raise ValueError(f"no cross-modal state at {state_dir}")
-    return {
-        "text_members": spark.read.parquet(
-            _vpath(state_dir, "text_members", text_versions[-1])
-        ),
-        "image_members": _read_all(spark, state_dir, "image_members"),
-        "audio_members": _read_all(spark, state_dir, "audio_members"),
-        "video_members": _read_all(spark, state_dir, "video_members"),
-    }
+    return tables
 
 
 def duplicate_assets_report(

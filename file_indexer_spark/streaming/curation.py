@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from file_indexer_spark.functions import hashing as H
 from file_indexer_spark.operators.curation import BENCH_HEX, CONTAMINATION_THRESHOLD
+from file_indexer_spark.streaming.util import read_parquet_stream
 
 DOCS_SOURCE_SCHEMA = T.StructType(
     [
@@ -52,12 +53,7 @@ DOCS_SOURCE_SCHEMA = T.StructType(
 def read_source_docs_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(DOCS_SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
+    return read_parquet_stream(spark, src, DOCS_SOURCE_SCHEMA, max_files_per_trigger)
 
 
 def bench_shingle_set(docs: DataFrame) -> list[int]:
@@ -122,10 +118,6 @@ def curation_stream(stream: DataFrame, bench_shingles: list[int]) -> DataFrame:
     )
 
 
-def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> None:
-    from file_indexer_spark.streaming.util import run_to_memory_sink as _run
-
-    _run(stream_df, table_name, output_mode="append")
 
 
 def curation_accounting(raw_docs: DataFrame, decisions: DataFrame) -> DataFrame:
@@ -173,12 +165,7 @@ DRIFT_STREAM_SCHEMA = T.StructType(
 def read_drift_docs_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(DRIFT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
+    return read_parquet_stream(spark, src, DRIFT_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def drift_histogram_stream(stream: DataFrame) -> DataFrame:

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from file_indexer_spark.streaming.util import read_parquet_stream
+
 DOCS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),
@@ -34,12 +36,7 @@ DOCS_STREAM_SCHEMA = T.StructType(
 def read_docs_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
+    return read_parquet_stream(spark, src, DOCS_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def dedup_stream(stream: DataFrame) -> DataFrame:
@@ -65,9 +62,3 @@ def dedup_stream_bounded(stream: DataFrame, watermark: str = "1 hour") -> DataFr
         .dropDuplicatesWithinWatermark(["content_hash"])
         .select("content_hash")
     )
-
-
-def run_to_memory_sink(stream_df: DataFrame, table_name: str) -> None:
-    from file_indexer_spark.streaming.util import run_to_memory_sink as _run
-
-    _run(stream_df, table_name, output_mode="append")

@@ -10,21 +10,20 @@ Driven from ``foreachBatch`` over the batch maintenance operator the
 repo already gates:
 
   * the STATE is the materialized index of
-    :func:`~file_indexer_spark.operators.text.bm25_index_tables`,
-    laid out as one committed version dir per micro-batch
-    (``v{batch}/postings|doclen|scalars``) — a foreachBatch replay
-    overwrites its own version dir, so at-least-once delivery cannot
-    double-count a batch;
+    :func:`~file_indexer_spark.operators.text.bm25_index_tables` kept
+    in an :class:`~file_indexer_spark.index_store.IndexStore` (layout,
+    commit markers and the replay guard are documented there): one
+    version per micro-batch, every table an append table;
   * each micro-batch tokenizes and aggregates ITSELF only
     (:func:`~file_indexer_spark.operators.text.bm25_index_tables`
     over the batch — exactly the tables t17's ``bm25_append`` unions
     in), with the batch's postings term-clustered inside its version
-    dir so serving's IN predicate prunes row groups from day one;
+    so serving's IN predicate prunes row groups from day one;
   * serving (:func:`load_lexical_index` →
     :func:`~file_indexer_spark.operators.text.bm25_topk_from_index`)
-    reads every committed version dir; the corpus scalars are the SUM
-    of the per-batch 1-row scalar dirs — O(number of batches) rows,
-    never a re-aggregation of the doc-length table.
+    reads the store's read set; the corpus scalars are the SUM of the
+    per-segment 1-row scalar tables — O(number of batches) rows, never
+    a re-aggregation of the doc-length table.
 
 Exactness: BM25's statistics are pure counts, so for arrival batches
 with disjoint doc_ids (the dd12/sim12 convention) the union of
@@ -33,14 +32,10 @@ per-batch index tables IS the full-corpus index — t17's
 t19 registry gate drains a 3-arrival stream and hash-checks the served
 ranking against t15's from-scratch DuckDB oracle, verbatim.
 
-State at scale: postings are O(corpus distinct (doc, term)) narrow
-rows of append-only parquet; each version dir fragments every term's
-posting list further (exactly the degradation t18 measures), so a
-long-running ingest runs :func:`compact_lexical_state` on the
-maintenance cadence — t18's term-clustered rewrite pointed at the
-streamed state, serving-consistent because the compacted dir only
-counts once its commit marker lands and supersedes everything at or
-below its watermark (the ``streaming/ann.py`` discipline).
+State at scale: each version fragments every term's posting list
+further (exactly the degradation t18 measures), so a long-running
+ingest runs :func:`compact_lexical_state` on the maintenance cadence —
+t18's term-clustered rewrite pointed at the streamed state.
 
 Cites: reference two-phase ingest loop
 (/root/reference/file_indexer/indexer.py:376-470) — the reference
@@ -50,12 +45,13 @@ is that contract for the lexical retrieval index.
 
 from __future__ import annotations
 
-import os
-
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from file_indexer_spark.index_store import IndexStore
 from file_indexer_spark.operators import text as tx
+from file_indexer_spark.streaming.util import drain_foreach_batch, read_parquet_stream
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -64,57 +60,11 @@ DOC_STREAM_SCHEMA = T.StructType(
     ]
 )
 
-_INDEX_TABLES = ("postings", "doclen", "scalars")
-
 
 def read_docs_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
-
-
-def _versions(state_dir: str) -> list[int]:
-    """Committed version dirs: ``scalars`` is written LAST inside a
-    version, so its _SUCCESS is the version's commit marker — a crash
-    between table writes leaves an uncommitted dir the replay
-    overwrites."""
-    if not os.path.isdir(state_dir):
-        return []
-    return sorted(
-        int(n[1:])
-        for n in os.listdir(state_dir)
-        if n.startswith("v")
-        and n[1:].isdigit()
-        and os.path.exists(os.path.join(state_dir, n, "scalars", "_SUCCESS"))
-    )
-
-
-def _compacted_through(state_dir: str) -> int:
-    """Highest committed ``c{m}`` compaction (−1 if none)."""
-    cs = [
-        int(n[1:])
-        for n in (os.listdir(state_dir) if os.path.isdir(state_dir) else [])
-        if n.startswith("c")
-        and n[1:].isdigit()
-        and os.path.exists(os.path.join(state_dir, n, "scalars", "_SUCCESS"))
-    ]
-    return max(cs) if cs else -1
-
-
-def _live_dirs(state_dir: str) -> list[str]:
-    """Consistent read set: the newest compaction dir plus every
-    committed version above its watermark."""
-    m = _compacted_through(state_dir)
-    dirs = [os.path.join(state_dir, f"c{m}")] if m >= 0 else []
-    dirs += [
-        os.path.join(state_dir, f"v{v}") for v in _versions(state_dir) if v > m
-    ]
-    return dirs
+    return read_parquet_stream(spark, src, DOC_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def ingest_batch(
@@ -122,26 +72,26 @@ def ingest_batch(
 ) -> None:
     """Fold ONE document micro-batch into the lexical index: tokenize
     and aggregate the batch only (t17's append economics), land its
-    postings term-clustered, commit via the scalars marker. Idempotent
-    per version (foreachBatch's at-least-once contract): a version at
-    or below the committed/compacted watermark is skipped."""
-    versions = _versions(state_dir)
-    last = max(versions[-1] if versions else -1, _compacted_through(state_dir))
-    if version <= last:
-        return  # replayed micro-batch: already folded (or compacted)
-    tables = tx.bm25_index_tables(batch.select("doc_id", "text"))
-    vdir = os.path.join(state_dir, f"v{version}")
-    postings = tables["postings"].repartitionByRange(
-        tx.BM25_POSTINGS_RANGE_PARTITIONS, "term"
-    ).sortWithinPartitions("term", "doc_id")
-    postings.write.mode("overwrite").parquet(os.path.join(vdir, "postings"))
-    tables["doclen"].write.mode("overwrite").parquet(
-        os.path.join(vdir, "doclen")
+    postings term-clustered, commit the version. A replayed version
+    (foreachBatch's at-least-once contract) is skipped."""
+    store = IndexStore(spark, state_dir)
+    if store.is_replay(version):
+        return
+    store.write(
+        version, tx.bm25_index_tables(batch.select("doc_id", "text")), tx.BM25_CLUSTER
     )
-    # LAST: the version's commit marker
-    tables["scalars"].write.mode("overwrite").parquet(
-        os.path.join(vdir, "scalars")
-    )
+    store.commit(version)
+
+
+def _sum_scalars(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The serving dict: per-segment scalar rows folded into one."""
+    return {
+        **tables,
+        "scalars": tables["scalars"].agg(
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.sum("tot_tokens").cast("long").alias("tot_tokens"),
+        ),
+    }
 
 
 def load_lexical_index(
@@ -149,47 +99,18 @@ def load_lexical_index(
 ) -> dict[str, DataFrame]:
     """The stored index as serving-ready frames — t16's serve path
     (``bm25_topk_from_index``) runs on this dict unchanged, mid-ingest,
-    after drain, or across compactions. Scalars fold the per-batch
-    1-row dirs with one O(batches) sum."""
-    import pyspark.sql.functions as F
-
-    dirs = _live_dirs(state_dir)
-    if not dirs:
+    after drain, or across compactions."""
+    tables = IndexStore(spark, state_dir).read()
+    if not tables:
         raise ValueError(f"no lexical index state at {state_dir}")
-    mats = {
-        name: spark.read.parquet(*[os.path.join(d, name) for d in dirs])
-        for name in ("postings", "doclen")
-    }
-    mats["scalars"] = (
-        spark.read.parquet(*[os.path.join(d, "scalars") for d in dirs])
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("tot_tokens").cast("long").alias("tot_tokens"),
-        )
-    )
-    return mats
+    return _sum_scalars(tables)
 
 
 def compact_lexical_state(spark: SparkSession, state_dir: str) -> int:
-    """t18's compaction pointed at the streamed state: fold every live
-    dir into ONE term-clustered ``c{max_version}`` (postings rewritten
-    through the shared writer, doclen coalesced, scalars pre-summed to
-    one row), then drop the superseded dirs. Serving stays consistent
-    throughout (see :func:`_live_dirs`). Returns the new watermark."""
-    import shutil
-
-    old_m = _compacted_through(state_dir)
-    versions = [v for v in _versions(state_dir) if v > old_m]
-    if not versions:
-        return old_m
-    new_m = versions[-1]
-    mats = load_lexical_index(spark, state_dir)
-    tx.bm25_compact(spark, mats, os.path.join(state_dir, f"c{new_m}"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"), ignore_errors=True)
-    if old_m >= 0:
-        shutil.rmtree(os.path.join(state_dir, f"c{old_m}"), ignore_errors=True)
-    return new_m
+    """t18's compaction pointed at the streamed state: fold the read
+    set into ONE term-clustered compaction (scalars pre-summed to one
+    row). Returns the new watermark."""
+    return IndexStore(spark, state_dir).compact(_sum_scalars, tx.BM25_CLUSTER)
 
 
 def ingest_lexical_stream(
@@ -198,24 +119,10 @@ def ingest_lexical_stream(
     state_dir: str,
     checkpoint_dir: str,
 ):
-    """Run the lexical ingest over a document stream (availableNow:
-    drain-and-stop; pass a processingTime trigger via ``.trigger`` on
-    a long-lived pipeline). Each micro-batch runs
-    :func:`ingest_batch`."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch(spark, batch, state_dir, int(batch_id))
-
-    query = (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain a document stream through :func:`ingest_batch`."""
+    return drain_foreach_batch(
+        docs_stream, lambda b, v: ingest_batch(spark, b, state_dir, v), checkpoint_dir
     )
-    query.awaitTermination()
-    return query
 
 
 def search(

@@ -11,9 +11,11 @@ operators this repo already gates, driven from ``foreachBatch``:
   * the STATE is the materialized corpus LSH index
     (:func:`~file_indexer_spark.operators.dedup.lsh_index_tables`:
     the narrow (doc_id, band, digest) band table + the (doc_id,
-    shingles) verification sets) plus the dd7 cluster ASSIGNMENT —
-    all parquet, append-only for the index, versioned per batch for
-    the assignment;
+    shingles) verification sets) plus the dd7 cluster ASSIGNMENT and
+    the decision log, kept in an
+    :class:`~file_indexer_spark.index_store.IndexStore` (layout, commit
+    markers and the replay guard are documented there): the index and
+    the log are append tables, the assignment a snapshot table;
   * each micro-batch PROBES the stored band index (dd12,
     ``incremental_lsh_pairs`` — O(batch x matched buckets), never
     O(corpus)), REFRESHES only the touched clusters (dd13,
@@ -37,23 +39,22 @@ members — the decision LOG keeps the at-ingestion verdicts, the
 assignment table keeps the corpus truth.
 
 State at scale: the band index is O(corpus x bands) narrow rows
-(append-only parquet, bucketed by (band, digest) on a real lake so the
-probe join is co-located); the assignment is O(corpus) narrow rows,
-rewritten per batch only in its touched-cluster slice plus an anti-join
-passthrough — at 100 TB the passthrough copy is the next thing to
-replace with a MERGE-capable table format (the FilesTable manifest
-pattern), which changes the write, not the algebra.
+(bucketed by (band, digest) on a real lake so the probe join is
+co-located); the assignment is O(corpus) narrow rows, rewritten per
+batch only in its touched-cluster slice plus an anti-join passthrough
+— at 100 TB the passthrough copy is the next thing to replace with a
+MERGE-capable table format, which changes the write, not the algebra.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from file_indexer_spark.index_store import IndexStore
 from file_indexer_spark.operators import dedup as dd
+from file_indexer_spark.streaming.util import drain_foreach_batch, read_parquet_stream
 
 DOCS_STREAM_SCHEMA = T.StructType(
     [
@@ -63,28 +64,14 @@ DOCS_STREAM_SCHEMA = T.StructType(
 )
 
 
+def _store(spark: SparkSession, state_dir: str) -> IndexStore:
+    return IndexStore(spark, state_dir, snapshot=("assign",))
+
+
 def read_docs_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
-
-
-def _assign_versions(state_dir: str) -> list[int]:
-    root = os.path.join(state_dir, "assign")
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        int(n[1:]) for n in os.listdir(root) if n.startswith("v") and n[1:].isdigit()
-    )
-
-
-def _assign_path(state_dir: str, version: int) -> str:
-    return os.path.join(state_dir, "assign", f"v{version}")
+    return read_parquet_stream(spark, src, DOCS_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def ingest_batch(
@@ -92,49 +79,32 @@ def ingest_batch(
 ) -> None:
     """Fold ONE document micro-batch into the near-dup state at
     ``state_dir``: probe (dd12) → refresh (dd13) → append signatures →
-    log decisions. First batch bootstraps the state with the batch
-    dd3 → dd7 pipeline. Idempotent per version: a replayed micro-batch
-    (foreachBatch's at-least-once contract) that finds its own
-    assignment version already present is skipped."""
-    versions = _assign_versions(state_dir)
-    # monotone replay guard: foreachBatch batch ids strictly increase,
-    # so any committed version >= this one means this batch already
-    # folded (robust to later maintenance dropping old version dirs)
-    if versions and version <= versions[-1]:
-        return  # replayed micro-batch: state already folded
-    bands_path = os.path.join(state_dir, "bands")
-    sets_path = os.path.join(state_dir, "shingle_sets")
-    batch_tables = dd.lsh_index_tables(batch)
-    if not versions:
+    log decisions, all committed as one version. First batch
+    bootstraps the state with the batch dd3 → dd7 pipeline. A replayed
+    version (foreachBatch's at-least-once contract) is skipped."""
+    store = _store(spark, state_dir)
+    if store.is_replay(version):
+        return
+    stored = store.read(("bands", "shingle_sets", "assign"))
+    if not stored:
         assign = dd.dedup_clusters(batch, dd.minhash_lsh_pairs(batch))
     else:
-        stored = {
-            "bands": spark.read.parquet(bands_path),
-            "shingle_sets": spark.read.parquet(sets_path),
-        }
-        old_assign = spark.read.parquet(_assign_path(state_dir, versions[-1]))
         new_pairs = dd.incremental_lsh_pairs(stored, batch)
-        assign = dd.incremental_cluster_refresh(old_assign, new_pairs, batch)
-    # 1) the refreshed assignment — a fresh version dir (never
-    #    overwrite what the refresh is still lazily reading)
-    assign.write.mode("overwrite").parquet(_assign_path(state_dir, version))
-    # 2) at-ingestion decisions for THIS batch's docs (read back from
-    #    the just-written version: no recompute)
-    committed = spark.read.parquet(_assign_path(state_dir, version))
-    decisions = (
-        committed.join(batch.select("doc_id"), "doc_id", "left_semi")
-        .select(
-            F.lit(version).cast("long").alias("batch_id"),
-            "doc_id",
-            F.col("is_canonical").alias("accepted"),
-            "cluster_id",
-        )
+        assign = dd.incremental_cluster_refresh(stored["assign"], new_pairs, batch)
+    # at-ingestion decisions for THIS batch's docs, read back from the
+    # landed assignment (no recompute)
+    landed = spark.read.parquet(store.write(version, {"assign": assign})["assign"])
+    decisions = landed.join(batch.select("doc_id"), "doc_id", "left_semi").select(
+        F.lit(version).cast("long").alias("batch_id"),
+        "doc_id",
+        F.col("is_canonical").alias("accepted"),
+        "cluster_id",
     )
-    decisions.write.mode("append").parquet(os.path.join(state_dir, "decisions"))
-    # 3) append the batch's signature rows to the stored index (only
-    #    AFTER the probe consumed the pre-batch index state)
-    batch_tables["bands"].write.mode("append").parquet(bands_path)
-    batch_tables["shingle_sets"].write.mode("append").parquet(sets_path)
+    # bands and shingle sets share an unmaterialized checkpoint
+    store.write(
+        version, {"decisions": decisions, **dd.lsh_index_tables(batch)}, parallel=False
+    )
+    store.commit(version)
 
 
 def ingest_neardup_stream(
@@ -143,32 +113,23 @@ def ingest_neardup_stream(
     state_dir: str,
     checkpoint_dir: str,
 ):
-    """Run the near-dup ingest over a document stream (availableNow:
-    drain-and-stop; pass a processingTime trigger via ``.trigger`` on a
-    long-lived pipeline). Each micro-batch runs :func:`ingest_batch`."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch(spark, batch, state_dir, int(batch_id))
-
-    query = (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain a document stream through :func:`ingest_batch`."""
+    return drain_foreach_batch(
+        docs_stream, lambda b, v: ingest_batch(spark, b, state_dir, v), checkpoint_dir
     )
-    query.awaitTermination()
-    return query
+
+
+def _read(spark: SparkSession, state_dir: str, name: str) -> DataFrame:
+    tables = _store(spark, state_dir).read((name,))
+    if not tables:
+        raise ValueError(f"no near-dup state at {state_dir}")
+    return tables[name]
 
 
 def final_assignments(spark: SparkSession, state_dir: str) -> DataFrame:
     """The corpus assignment after the last folded batch — provably
     equal to dd7 recomputed from scratch over everything ingested."""
-    versions = _assign_versions(state_dir)
-    if not versions:
-        raise ValueError(f"no near-dup state at {state_dir}")
-    return spark.read.parquet(_assign_path(state_dir, versions[-1]))
+    return _read(spark, state_dir, "assign")
 
 
 def ingest_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -177,4 +138,4 @@ def ingest_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     ``accepted`` is the verdict AT ingestion time; a later merge can
     demote an accepted doc in the assignment table without rewriting
     history here."""
-    return spark.read.parquet(os.path.join(state_dir, "decisions"))
+    return _read(spark, state_dir, "decisions")

@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_indexer_spark.streaming.util import read_parquet_stream
+
 FILES_STREAM_SCHEMA = (
     "path string, filename string, checksum string, "
     "modification_datetime timestamp, file_size long, indexed_at timestamp"
@@ -39,12 +41,7 @@ FILES_STREAM_SCHEMA = (
 def read_files_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(FILES_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(src)
-    )
+    return read_parquet_stream(spark, src, FILES_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def ingest_quarantine_stream(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from file_indexer_spark.index_store import land
 from file_indexer_spark.operators import dedup as dd
 from file_indexer_spark.operators import events as ev
 from file_indexer_spark.operators import similarity as sim
@@ -1238,8 +1239,11 @@ def test_ivfpq_upsert_matches_frozen_scratch_and_is_idempotent(
     from pyspark.sql import functions as F
 
     base = embeddings.filter(F.col("vec_id") % 10 != 7)
-    mats = sim.write_ivfpq_index(
-        base.sparkSession, sim.ivfpq_index_tables(base), str(tmp_path / "idx")
+    mats = land(
+        base.sparkSession,
+        sim.ivfpq_index_tables(base),
+        str(tmp_path / "idx"),
+        sim.IVFPQ_CLUSTER,
     )
     batch, dels = _sim17_edits(embeddings)
     edited = sim.ivfpq_upsert(mats, batch, dels)
@@ -1280,8 +1284,11 @@ def test_ivfpq_compact_folds_mask_and_preserves_ranking(embeddings, tmp_path):
     from pyspark.sql import functions as F
 
     base = embeddings.filter(F.col("vec_id") % 10 != 7)
-    mats = sim.write_ivfpq_index(
-        base.sparkSession, sim.ivfpq_index_tables(base), str(tmp_path / "idx")
+    mats = land(
+        base.sparkSession,
+        sim.ivfpq_index_tables(base),
+        str(tmp_path / "idx"),
+        sim.IVFPQ_CLUSTER,
     )
     batch, dels = _sim17_edits(embeddings)
     edited = sim.ivfpq_upsert(mats, batch, dels)
@@ -1906,8 +1913,8 @@ def test_bm25_upsert_updates_and_is_idempotent(spark, tmp_path):
         "doc_id long, text string",
     )
     batch = truth.filter("doc_id IN (2, 3)")
-    mats = tx.write_bm25_index(
-        spark, tx.bm25_index_tables(stale), str(tmp_path / "idx")
+    mats = land(
+        spark, tx.bm25_index_tables(stale), str(tmp_path / "idx"), tx.BM25_CLUSTER
     )
     merged = tx.bm25_upsert(mats, batch)
     scratch = [tuple(r) for r in tx.bm25_topk(truth, k=3).collect()]
@@ -1930,8 +1937,11 @@ def test_bm25_compaction_preserves_ranking(spark, tmp_path):
         [(i, f"spark join window filler{i % 3} spark") for i in range(8)],
         "doc_id long, text string",
     )
-    mats = tx.write_bm25_index(
-        spark, tx.bm25_index_tables(docs.filter("doc_id < 5")), str(tmp_path / "b")
+    mats = land(
+        spark,
+        tx.bm25_index_tables(docs.filter("doc_id < 5")),
+        str(tmp_path / "b"),
+        tx.BM25_CLUSTER,
     )
     for lo, hi in ((5, 7), (7, 8)):
         mats = tx.bm25_append(
@@ -2321,8 +2331,11 @@ def test_positional_upsert_updates_and_is_idempotent(spark, tmp_path):
         "doc_id long, text string",
     )
     batch = truth.filter("doc_id IN (2, 3)")
-    mats = tx.write_positional_index(
-        spark, tx.positional_index_tables(stale), str(tmp_path / "idx")
+    mats = land(
+        spark,
+        tx.positional_index_tables(stale),
+        str(tmp_path / "idx"),
+        tx.POSITIONAL_CLUSTER,
     )
     merged = tx.positional_upsert(mats, batch)
     want = [tuple(r) for r in tx.phrase_search(truth).collect()]

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from file_indexer_spark.index_store import land
 from file_indexer_spark.operators import duplicates as dup
 from file_indexer_spark.plans import inspect as pi
 from file_indexer_spark.tables import files_df, load_table
@@ -894,10 +895,11 @@ def test_bm25_compaction_keeps_term_pushdown(spark, sf_smoke, tmp_path):
     from file_indexer_spark.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents")
-    mats = tx.write_bm25_index(
+    mats = land(
         spark,
         tx.bm25_index_tables(docs.filter("doc_id % 2 = 0")),
         str(tmp_path / "base"),
+        tx.BM25_CLUSTER,
     )
     mats = tx.bm25_append(mats, docs.filter("doc_id % 2 = 1"))
     compacted = tx.bm25_compact(spark, mats, str(tmp_path / "compact"))
@@ -917,8 +919,11 @@ def test_phrase_serve_term_pushdown(spark, sf_smoke, tmp_path):
     from file_indexer_spark.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents")
-    mats = tx.write_positional_index(
-        spark, tx.positional_index_tables(docs), str(tmp_path / "idx")
+    mats = land(
+        spark,
+        tx.positional_index_tables(docs),
+        str(tmp_path / "idx"),
+        tx.POSITIONAL_CLUSTER,
     )
     served = tx.phrase_search_from_index(mats)
     pushed = " ".join(pi.pushed_filters(served))

@@ -8,9 +8,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from file_indexer_spark.index_store import IndexStore, land
 from file_indexer_spark.indexer.files_table import FilesTable
 from file_indexer_spark.streaming import incremental as inc
 from file_indexer_spark.streaming import windows as sw
+from file_indexer_spark.streaming.util import run_to_memory_sink
 from file_indexer_spark.tables import events_df
 
 
@@ -187,7 +189,7 @@ def test_streaming_dedup_filters_rearrivals_across_batches(spark, tmp_path):
 
     stream = sd.read_docs_stream(spark, src, max_files_per_trigger=1)
     assert stream.isStreaming
-    sd.run_to_memory_sink(sd.dedup_stream(stream), "st4_test_sink")
+    run_to_memory_sink(sd.dedup_stream(stream), "st4_test_sink")
     rows = [r["content_hash"] for r in spark.table("st4_test_sink").collect()]
     assert len(rows) == 3 and len(set(rows)) == 3  # aaa, bbb, ccc — each once
 
@@ -244,7 +246,7 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
     bench = sc.bench_shingle_set(docs)
     stream = sc.read_source_docs_stream(spark, src_dir, max_files_per_trigger=1)
     assert stream.isStreaming
-    sc.run_to_memory_sink(sc.curation_stream(stream, bench), "st7_sink")
+    run_to_memory_sink(sc.curation_stream(stream, bench), "st7_sink")
     got = sc.curation_accounting(docs, spark.table("st7_sink")).collect()
     want = curation_pipeline(docs).collect()
     assert [r.asDict() for r in got] == [r.asDict() for r in want]
@@ -296,7 +298,7 @@ def test_bounded_dedup_state_readmits_past_watermark(spark, tmp_path):
         spark.readStream.format("parquet").schema(schema)
         .option("maxFilesPerTrigger", 1).load(src)
     )
-    sd.run_to_memory_sink(sd.dedup_stream_bounded(stream), "st4b_sink")
+    run_to_memory_sink(sd.dedup_stream_bounded(stream), "st4b_sink")
     hashes = [r["content_hash"] for r in spark.table("st4b_sink").collect()]
     import hashlib
 
@@ -561,13 +563,13 @@ def test_streaming_neardup_ingest_batch_replay_is_idempotent(spark, tmp_path):
     before = sorted(
         (r["batch_id"], r["doc_id"]) for r in snd.ingest_decisions(spark, state).collect()
     )
-    n_bands = spark.read.parquet(f"{state}/bands").count()
+    n_bands = IndexStore(spark, state).read()["bands"].count()
     snd.ingest_batch(spark, b2, state, 1)  # replay
     after = sorted(
         (r["batch_id"], r["doc_id"]) for r in snd.ingest_decisions(spark, state).collect()
     )
     assert after == before
-    assert spark.read.parquet(f"{state}/bands").count() == n_bands
+    assert IndexStore(spark, state).read()["bands"].count() == n_bands
     got = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in snd.final_assignments(spark, state).collect()
@@ -603,7 +605,7 @@ def test_streaming_ann_ingest_matches_frozen_quantizer_build(spark, sf_smoke, tm
     boot = sim.ivfpq_index_tables(b1)
     for name in ("centroids", "codebook"):
         want = sorted(map(tuple, boot[name].collect()))
-        got = sorted(map(tuple, spark.read.parquet(f"{state}/{name}").collect()))
+        got = sorted(map(tuple, sann.load_index(spark, state)[name].collect()))
         assert got == want, name
 
     queries = emb.filter(F.col("vec_id") < sim.N_QUERIES).select(
@@ -645,7 +647,9 @@ def test_streaming_ann_ingest_batch_replay_is_idempotent(spark, sf_smoke, tmp_pa
     }
     stored = {
         r["vec_id"]: (tuple(r["codes"]), r["centroid_id"])
-        for r in spark.read.parquet(f"{state}/codes/v1").collect()
+        for r in spark.read.parquet(
+            IndexStore(spark, state).read_paths()["codes"][-1]
+        ).collect()
     }
     assert stored == direct
 
@@ -729,8 +733,9 @@ def test_ann_state_compaction_preserves_serving(spark, sf_smoke, tmp_path):
     before = [tuple(r) for r in sann.search(spark, state, queries).collect()]
     wm = sann.compact_state(spark, state)
     assert wm == 1
-    names = sorted(os.listdir(os.path.join(state, "codes")))
-    assert names == ["c1"]
+    # only the compacted segment remains
+    assert IndexStore(spark, state).segments() == ["c1"]
+    assert sorted(os.listdir(state)) == ["c1"]
     after = [tuple(r) for r in sann.search(spark, state, queries).collect()]
     assert after == before
     n = sann.load_index(spark, state)["codes"].count()
@@ -760,8 +765,9 @@ def test_crossmodal_state_compaction_preserves_report(spark, sf_smoke, tmp_path)
     before = sorted(map(tuple, sxm.duplicate_assets_report(spark, state).collect()))
     wm = sxm.compact_state(spark, state)
     assert wm == 1
-    assert sorted(os.listdir(os.path.join(state, "image_members"))) == ["c1"]
-    assert sorted(os.listdir(os.path.join(state, "text_members"))) == ["v1"]
+    # only the compacted segment remains
+    assert IndexStore(spark, state).segments() == ["c1"]
+    assert sorted(os.listdir(state)) == ["c1"]
     after = sorted(map(tuple, sxm.duplicate_assets_report(spark, state).collect()))
     assert after == before
     sxm.ingest_batch(spark, b2, state, 1)  # replay of a vacuumed-past batch
@@ -1181,8 +1187,8 @@ def test_cdc_dense_ingest_last_write_wins_and_compacts(spark, sf_smoke, tmp_path
     served = [tuple(r) for r in sann.search_cdc(spark, state, queries).collect()]
 
     # reference: the batch-path upsert over the same base index
-    bmats = sim.write_ivfpq_index(
-        spark, sim.ivfpq_index_tables(base), str(tmp_path / "bidx")
+    bmats = land(
+        spark, sim.ivfpq_index_tables(base), str(tmp_path / "bidx"), sim.IVFPQ_CLUSTER
     )
     edited = sim.ivfpq_upsert(bmats, adds.unionByName(updates), dels)
     assert served == [
@@ -1202,8 +1208,10 @@ def test_cdc_dense_ingest_last_write_wins_and_compacts(spark, sf_smoke, tmp_path
     # compaction: same ranking, mask and version dirs folded away
     wm = sann.compact_cdc_state(spark, state)
     assert wm == 2
-    assert sorted(os.listdir(os.path.join(state, "codes"))) == ["c2"]
-    assert sann._live_tomb_paths(state) == []
+    # only the compacted segment remains, and no tombstones are live
+    store = IndexStore(spark, state)
+    assert store.segments() == ["c2"] and sorted(os.listdir(state)) == ["c2"]
+    assert "tombs" not in store.read_paths()
     assert served == [
         tuple(r) for r in sann.search_cdc(spark, state, queries).collect()
     ]
